@@ -236,7 +236,7 @@ object ScaleProbe {
 
   private def batchFlushPeriodicStreamDf(spark: SparkSession): DataFrame =
     // the r13 exact free-running-ticker flusher over the same synthetic
-    // arrivals — suite twin so the two state machines diff side by side
+    // arrivals — suite twin so the two flush policies diff side by side
     graft.streaming.EventStream
       .batchFlushPeriodic(syntheticEvts(spark), batchSize = 100, tickSec = 600).toDF()
 

@@ -99,17 +99,12 @@ object ConnectedComponents {
     // nothing here; with AQE off each round's materialization fuses
     // into ONE multi-stage job (JobProfile: doc_dedup_canon 58 → ~20
     // jobs). Static planning still reuses the per-round exchange
-    // (ReuseExchange). Restored in `finally`; escape hatch
-    // spark.graft.cc.adaptive=true keeps AQE on (e.g. a deployment
-    // that has measured mega-component join skew and wants AQE's
-    // skew-join splitting back at the price of 5× the jobs).
+    // (ReuseExchange). Restored in `finally`.
     val spark = edges.sparkSession
     val aqeKey = "spark.sql.adaptive.enabled"
     val shpKey = "spark.sql.shuffle.partitions"
     val prevAqe = spark.conf.getOption(aqeKey)
     val prevShp = spark.conf.getOption(shpKey)
-    val keepAqe =
-      spark.conf.getOption("spark.graft.cc.adaptive").exists(_.toBoolean)
     try {
     // LAZY localCheckpoint + count(): ONE job both materializes the
     // checkpoint and returns its size. The checkpoint replaces the
@@ -136,13 +131,11 @@ object ConnectedComponents {
     // constant tuned to the local core count — and capped at
     // defaultParallelism, the same ceiling the session's
     // shuffle.partitions already encodes.
-    if (!keepAqe) {
-      val loopParts = math.max(1L, math.min(
-        spark.sparkContext.defaultParallelism.toLong,
-        (baseCount + 4095) / 4096))
-      spark.conf.set(aqeKey, "false")
-      spark.conf.set(shpKey, loopParts.toString)
-    }
+    val loopParts = math.max(1L, math.min(
+      spark.sparkContext.defaultParallelism.toLong,
+      (baseCount + 4095) / 4096))
+    spark.conf.set(aqeKey, "false")
+    spark.conf.set(shpKey, loopParts.toString)
     val nodes = base.select(col("u").as("id"))
       .union(base.select(col("v").as("id"))).distinct()
     var cur = base.filter(col("u") =!= col("v"))
@@ -181,15 +174,13 @@ object ConnectedComponents {
       // restore the caller's AQE setting — the returned frame (and
       // everything downstream of it) executes under the session's own
       // configuration; only the loop's materializations ran without it
-      if (!keepAqe) {
-        prevAqe match {
-          case Some(v) => spark.conf.set(aqeKey, v)
-          case None => spark.conf.unset(aqeKey)
-        }
-        prevShp match {
-          case Some(v) => spark.conf.set(shpKey, v)
-          case None => spark.conf.unset(shpKey)
-        }
+      prevAqe match {
+        case Some(v) => spark.conf.set(aqeKey, v)
+        case None => spark.conf.unset(aqeKey)
+      }
+      prevShp match {
+        case Some(v) => spark.conf.set(shpKey, v)
+        case None => spark.conf.unset(shpKey)
       }
     }
   }

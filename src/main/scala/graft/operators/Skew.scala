@@ -67,13 +67,9 @@ object Skew {
       case None => df
       case Some((planned, bytes)) =>
         val spark = df.sparkSession
-        // conf first, env second (A/B sweeps without a session rebuild),
-        // measured default last
         val perTask = math.max(1L, org.apache.spark.network.util.JavaUtils
-          .byteStringAsBytes(spark.conf.getOption(
-              "spark.graft.spread.bytesPerTask")
-            .orElse(sys.env.get("SPARK_GRAFT_SPREAD_BPT"))
-            .getOrElse("64k")))
+          .byteStringAsBytes(
+            spark.conf.get("spark.graft.spread.bytesPerTask", "64k")))
         val cores = spark.sparkContext.defaultParallelism.toLong
         val target = math.min(cores,
           math.max(1L, (bytes + perTask - 1) / perTask)).toInt

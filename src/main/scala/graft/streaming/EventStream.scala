@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
@@ -16,20 +16,9 @@ case class SessionState(start_s: Long, last_s: Long, n_events: Int)
 case class ClosedSession(user_id: Long, start_s: Long, end_s: Long,
     n_events: Int)
 
-/** Open time-OR-size batch carried between micro-batches
-  * (epoch seconds; batches_closed numbers the next close 1-based). */
-case class BatchState(n: Int, first_id: Long, last_id: Long,
-    first_s: Long, last_s: Long, batches_closed: Long)
-
 /** A flushed batch emitted downstream (closed_by: "size" | "time"). */
 case class ClosedBatch(stream: String, batch_id: Long, n_events: Int,
     first_event: Long, last_event: Long, span_sec: Long, closed_by: String)
-
-/** Open periodic-ticker batch ([[EventStream.batchFlushPeriodic]]):
-  * `t0` anchors the stream's tick phase at its first arrival second;
-  * `w` is the window holding the pending batch. Constant-size state. */
-case class PeriodicState(t0: Long, w: Long, n: Int, first_id: Long,
-    last_id: Long, last_s: Long, batches_closed: Long)
 
 /** A ticker-model flushed batch (closed_by: "size" | "tick"; close_s =
   * last arrival second for size, window-end tick second for tick). */
@@ -37,16 +26,13 @@ case class ClosedPeriodicBatch(stream: String, batch_id: Long,
     n_events: Int, first_event: Long, last_event: Long, closed_by: String,
     close_s: Long)
 
-/** Open batch state for the latency twin: the pending events' arrival
-  * seconds, newest first (bounded by batchSize, so state stays a few
-  * dozen bytes per stream). */
-case class LatencyState(secs: List[Long], batches_closed: Long)
-
-/** Latency-twin state for the periodic-ticker model: the tick anchor,
-  * the pending batch's window, and its arrival seconds (newest first,
-  * bounded by batchSize). */
-case class PeriodicLatencyState(t0: Long, w: Long, secs: List[Long],
-    batches_closed: Long)
+/** Open batch of [[EventStream]]'s flush automaton, carried between
+  * micro-batches (epoch seconds): `t0` anchors the stream's tick phase
+  * at its first arrival, `w` is the tick window the pending batch opened
+  * in, `secs` holds the pending arrival seconds newest first (at most
+  * batchSize), and batches_closed numbers the next close 1-based. */
+private[streaming] case class FlushState(t0: Long, w: Long, first_id: Long,
+    last_id: Long, secs: List[Long], batches_closed: Long)
 
 /** One per-event queue-latency observation, emitted when its batch
   * closes (latency_s = batch close second − arrival second). */
@@ -204,104 +190,84 @@ object EventStream {
       .select(col("stream"),
         (unix_timestamp(col("window.start")) + 7200L).as("cutoff_hour_epoch"))
 
-  /** #9b-streaming Time-OR-size batch flush — the live twin of the
-    * batch `evt_batch_time` (queue.go:144-216): per stream, a batch is
-    * emitted the MOMENT it fills (`size`), and a later event arriving
-    * more than `timeLimitSec` after the last one first flushes the
-    * pending partial batch (`time`) — the gap-closure trick
-    * [[sessionize]] uses, deterministic without wall-clock timeouts.
-    * NOTE on fidelity (ADVICE r12): the reference's ticker is
-    * free-running and periodic — reset only after it fires, never on
-    * arrivals or size flushes — so under a steady sub-limit trickle
-    * (e.g. one event every 500 s against a 600 s limit) it also
-    * flushes partial batches the gap model would keep accumulating.
-    * The gap replay is a deterministic APPROXIMATION, exact when
-    * arrivals are dense (size flushes dominate) or fully idle (every
-    * gap beyond the limit flushes), which is the regime the corpus and
-    * the parity spec exercise. API REQUIREMENT: events must arrive in
-    * event_id (arrival) order ACROSS micro-batches — within one
-    * micro-batch this operator sorts, but a lower-event_id straggler
-    * in a LATER micro-batch is appended out of order, diverging from
-    * the batch operator (and span_sec, last_s − first_s, can go
-    * negative on out-of-order timestamps). Feed it an ordered source
-    * (Kafka per-partition order, or the replay harness) —
-    * BatchFlushParitySpec pins stream output == batch assignment minus
-    * each stream's open tail under that contract. */
-  def batchFlush(events: Dataset[Evt], batchSize: Int,
-      timeLimitSec: Long): Dataset[ClosedBatch] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[BatchState, ClosedBatch](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (stream: String, batch: Iterator[Evt], state: GroupState[BatchState]) =>
-          val out = List.newBuilder[ClosedBatch]
-          var st = state.getOption
-          def close(s: BatchState, reason: String): BatchState = {
-            out += ClosedBatch(stream, s.batches_closed + 1, s.n,
-              s.first_id, s.last_id, s.last_s - s.first_s, reason)
-            BatchState(0, 0L, 0L, 0L, 0L, s.batches_closed + 1)
-          }
-          batch.toSeq.sortBy(_.event_id).foreach { e =>
-            val sec = e.ts.getTime / 1000
-            st = st match {
-              case Some(s) if s.n > 0 && sec - s.last_s > timeLimitSec =>
-                // idle gap: the ticker would have flushed the pending
-                // partial batch before this arrival
-                Some(close(s, "time").copy(n = 1, first_id = e.event_id,
-                  last_id = e.event_id, first_s = sec, last_s = sec))
-              case Some(s) if s.n > 0 =>
-                Some(s.copy(n = s.n + 1, last_id = e.event_id, last_s = sec))
-              case other =>
-                Some(BatchState(1, e.event_id, e.event_id, sec, sec,
-                  other.map(_.batches_closed).getOrElse(0L)))
-            }
-            st = st.map(s => if (s.n >= batchSize) close(s, "size") else s)
-          }
-          st.foreach(state.update)
-          out.result().iterator
-      }
-  }
+  /** Flush policy of [[flush]]: besides filling, a pending batch closes
+    * on an idle gap longer than `limitSec` (`Gap`, "time") or on the
+    * first free-running tick after its window (`Tick`, "tick"). */
+  private sealed trait Policy
+  private final case class Gap(limitSec: Long) extends Policy
+  private final case class Tick(tickSec: Long) extends Policy
 
-  /** #9d-streaming EXACT periodic-ticker flush — the live twin of the
-    * batch `evt_batch_periodic`
-    * ([[graft.operators.Batching.assignPeriodic]], queue.go:155-173):
-    * ticks run free at the stream's first-arrival phase (t0 + k·tick),
-    * so a pending batch closes on size the moment it fills, or as
-    * "tick" when a later event lands in a later tick window (the first
-    * tick after the pending window flushed it; later ticks were empty
-    * no-ops). Unlike [[batchFlush]]'s gap approximation this emits the
-    * short batches a steady sub-limit trickle produces. Same
-    * in-order-across-micro-batches contract as [[batchFlush]]; state is
-    * constant-size per stream. BatchFlushParitySpec pins stream output
-    * == batch assignment minus each stream's open tail. */
-  def batchFlushPeriodic(events: Dataset[Evt], batchSize: Int,
-      tickSec: Long): Dataset[ClosedPeriodicBatch] = {
+  /** A batch [[flush]] closed: its members' arrival seconds (newest
+    * first), why it closed and the second it closed at. */
+  private final case class Closed(stream: String, batch_id: Long,
+      first_id: Long, last_id: Long, secs: List[Long], closed_by: String,
+      close_s: Long)
+
+  /** The reference's batching loop (internal/queue/queue.go:144-216) as
+    * one per-stream automaton keyed by event_type: the four batching
+    * twins below differ only in `policy` and in the `emit` that renders
+    * each closed batch inside the operator. A pending batch closes on
+    * size the moment it fills (close second = the filling arrival), or
+    * before taking an arrival that the policy says came after its flush:
+    *  - `Gap`: the arrival lands more than `limitSec` after the last one
+    *    (close second = the last arrival) — the gap-closure trick
+    *    [[sessionize]] uses, deterministic without wall-clock timeouts.
+    *    Fidelity (ADVICE r12): the reference's ticker is free-running
+    *    and periodic — reset only after it fires, never on arrivals or
+    *    size flushes — so under a steady sub-limit trickle (one event
+    *    every 500 s against a 600 s limit) it also flushes partial
+    *    batches the gap model keeps accumulating. The gap replay is a
+    *    deterministic APPROXIMATION, exact when arrivals are dense (size
+    *    flushes dominate) or fully idle (every gap beyond the limit
+    *    flushes), the regime the corpus and the parity specs exercise.
+    *  - `Tick`: the exact ticker (queue.go:155-173). Ticks run free at
+    *    the stream's first-arrival phase (t0 + k·tick) and the arrival
+    *    lands in a later tick window than the one the pending batch
+    *    opened in (close second = that window's end tick; later ticks
+    *    were empty no-ops). The window is fixed when a batch opens.
+    * API REQUIREMENT: events must arrive in event_id (arrival) order
+    * ACROSS micro-batches — within one micro-batch the operator sorts,
+    * but a lower-event_id straggler in a LATER micro-batch is appended
+    * out of order, diverging from the batch operators. Feed it an
+    * ordered source (Kafka per-partition order, or the replay harness).
+    * State holds up to batchSize arrival seconds per stream. Its layout
+    * (FlushState) replaced the four operators' own state classes, so a
+    * checkpoint they wrote fails Spark's state-schema check on restart:
+    * restart such a query from a fresh checkpoint. */
+  private def flush[U: Encoder](events: Dataset[Evt], batchSize: Int,
+      policy: Policy)(emit: Closed => Iterator[U]): Dataset[U] = {
     import events.sparkSession.implicits._
     events
       .groupByKey(_.event_type)
-      .flatMapGroupsWithState[PeriodicState, ClosedPeriodicBatch](
+      .flatMapGroupsWithState[FlushState, U](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (stream: String, batch: Iterator[Evt], state: GroupState[PeriodicState]) =>
-          val out = List.newBuilder[ClosedPeriodicBatch]
+        (stream: String, batch: Iterator[Evt], state: GroupState[FlushState]) =>
+          val out = List.newBuilder[U]
           var st = state.getOption
-          def close(s: PeriodicState, reason: String): PeriodicState = {
-            val closeS =
-              if (reason == "size") s.last_s else s.t0 + (s.w + 1) * tickSec
-            out += ClosedPeriodicBatch(stream, s.batches_closed + 1, s.n,
-              s.first_id, s.last_id, reason, closeS)
-            s.copy(n = 0, batches_closed = s.batches_closed + 1)
+          def close(s: FlushState, reason: String, at: Long): FlushState = {
+            out ++= emit(Closed(stream, s.batches_closed + 1, s.first_id,
+              s.last_id, s.secs, reason, at))
+            s.copy(secs = Nil, batches_closed = s.batches_closed + 1)
           }
           batch.toSeq.sortBy(_.event_id).foreach { e =>
             val sec = e.ts.getTime / 1000
-            var s = st.getOrElse(PeriodicState(sec, 0L, 0, 0L, 0L, sec, 0L))
-            val w = (sec - s.t0) / tickSec
-            if (s.n > 0 && w > s.w) s = close(s, "tick")
+            var s = st.getOrElse(FlushState(sec, 0L, 0L, 0L, Nil, 0L))
+            val w = policy match {
+              case Tick(tick) => (sec - s.t0) / tick
+              case _ => 0L
+            }
+            if (s.secs.nonEmpty) policy match {
+              case Gap(limit) if sec - s.secs.head > limit =>
+                s = close(s, "time", s.secs.head)
+              case Tick(tick) if w > s.w =>
+                s = close(s, "tick", s.t0 + (s.w + 1) * tick)
+              case _ =>
+            }
             s =
-              if (s.n == 0) s.copy(w = w, n = 1, first_id = e.event_id,
-                last_id = e.event_id, last_s = sec)
-              else s.copy(n = s.n + 1, last_id = e.event_id, last_s = sec)
-            if (s.n >= batchSize) s = close(s, "size")
+              if (s.secs.isEmpty) s.copy(w = w, first_id = e.event_id,
+                last_id = e.event_id, secs = sec :: Nil)
+              else s.copy(last_id = e.event_id, secs = sec :: s.secs)
+            if (s.secs.lengthCompare(batchSize) >= 0) s = close(s, "size", sec)
             st = Some(s)
           }
           st.foreach(state.update)
@@ -309,83 +275,65 @@ object EventStream {
       }
   }
 
+  /** #9b-streaming Time-OR-size batch flush — the live twin of the
+    * batch `evt_batch_time` ([[graft.operators.Batching.assignTimeOrSize]]):
+    * [[flush]] under the gap model, one row per closed batch with
+    * span_sec = last − first arrival second (negative when timestamps
+    * step backwards within the batch). BatchFlushParitySpec pins
+    * stream output == batch assignment minus each stream's open tail. */
+  def batchFlush(events: Dataset[Evt], batchSize: Int,
+      timeLimitSec: Long): Dataset[ClosedBatch] = {
+    import events.sparkSession.implicits._
+    flush(events, batchSize, Gap(timeLimitSec))(c => Iterator.single(
+      ClosedBatch(c.stream, c.batch_id, c.secs.size, c.first_id, c.last_id,
+        c.secs.head - c.secs.last, c.closed_by)))
+  }
+
+  /** #9d-streaming EXACT periodic-ticker flush — the live twin of the
+    * batch `evt_batch_periodic`
+    * ([[graft.operators.Batching.assignPeriodic]]): [[flush]] under the
+    * tick model, one row per closed batch with its close second. Unlike
+    * [[batchFlush]]'s gap approximation this emits the short batches a
+    * steady sub-limit trickle produces. BatchFlushParitySpec pins stream
+    * output == batch assignment minus each stream's open tail. */
+  def batchFlushPeriodic(events: Dataset[Evt], batchSize: Int,
+      tickSec: Long): Dataset[ClosedPeriodicBatch] = {
+    import events.sparkSession.implicits._
+    flush(events, batchSize, Tick(tickSec))(c => Iterator.single(
+      ClosedPeriodicBatch(c.stream, c.batch_id, c.secs.size, c.first_id,
+        c.last_id, c.closed_by, c.close_s)))
+  }
+
+  /** One queue-latency observation per member of a closed batch: close
+    * second − arrival second, oldest member first. */
+  private def latencies(c: Closed): Iterator[LatencyObs] =
+    c.secs.reverseIterator.map(a => LatencyObs(c.stream, c.batch_id, c.close_s - a))
+
   /** #27c-streaming Queue-latency observations — the live twin of the
     * batch `evt_queue_latency` (internal/event/metrics.go:29
-    * IncomingQueueLatencyHistogram): the same time-OR-size state
-    * machine as [[batchFlush]], but the state carries each pending
-    * event's arrival second (bounded by batchSize) and a batch close
-    * emits one latency observation per member — close second − arrival
-    * second, the deterministic replay's lower bound of arrival→flush.
-    * Bucketizing downstream (a windowed groupBy over `latency_s`)
-    * reproduces the histogram; emitting raw observations keeps the
-    * operator composable. Same in-order-across-micro-batches contract
-    * and gap-approximation caveat as [[batchFlush]].
+    * IncomingQueueLatencyHistogram): [[flush]] under the gap model,
+    * one observation per member at close (the deterministic replay's
+    * lower bound of arrival→flush). Bucketizing downstream (a windowed
+    * groupBy over `latency_s`) reproduces the histogram; emitting raw
+    * observations keeps the operator composable.
     * QueueLatencyParitySpec pins stream output == the batch query's
     * per-event latencies minus each stream's open tail. */
   def queueLatency(events: Dataset[Evt], batchSize: Int,
       timeLimitSec: Long): Dataset[LatencyObs] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[LatencyState, LatencyObs](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (stream: String, batch: Iterator[Evt], state: GroupState[LatencyState]) =>
-          val out = List.newBuilder[LatencyObs]
-          var st = state.getOption.getOrElse(LatencyState(Nil, 0L))
-          def close(s: LatencyState): LatencyState = {
-            val closeSec = s.secs.head // newest-first: head = last arrival
-            s.secs.reverseIterator.foreach(a =>
-              out += LatencyObs(stream, s.batches_closed + 1, closeSec - a))
-            LatencyState(Nil, s.batches_closed + 1)
-          }
-          batch.toSeq.sortBy(_.event_id).foreach { e =>
-            val sec = e.ts.getTime / 1000
-            if (st.secs.nonEmpty && sec - st.secs.head > timeLimitSec)
-              st = close(st)
-            st = st.copy(secs = sec :: st.secs)
-            if (st.secs.size >= batchSize) st = close(st)
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    flush(events, batchSize, Gap(timeLimitSec))(latencies)
   }
 
   /** #27c'-streaming Queue-latency observations under the EXACT ticker
-    * model — the live twin of `evt_queue_latency_periodic`: the
-    * [[batchFlushPeriodic]] state machine with per-event arrival
-    * seconds in state (bounded by batchSize), emitting close − arrival
-    * per member; a size close flushes at the filling arrival, a tick
-    * close at the pending window's end tick (the true flush instant).
-    * Same in-order contract; QueueLatencyParitySpec pins stream ==
-    * batch minus open tails. */
+    * model — the live twin of `evt_queue_latency_periodic`: [[flush]]
+    * under the tick model, so a tick close measures to the pending
+    * window's end tick (the true flush instant) and the batches are
+    * exactly [[batchFlushPeriodic]]'s. QueueLatencyParitySpec pins
+    * stream == batch minus open tails. */
   def queueLatencyPeriodic(events: Dataset[Evt], batchSize: Int,
       tickSec: Long): Dataset[LatencyObs] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[PeriodicLatencyState, LatencyObs](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (stream: String, batch: Iterator[Evt], state: GroupState[PeriodicLatencyState]) =>
-          val out = List.newBuilder[LatencyObs]
-          var st = state.getOption
-          def close(s: PeriodicLatencyState, closeS: Long): PeriodicLatencyState = {
-            s.secs.reverseIterator.foreach(a =>
-              out += LatencyObs(stream, s.batches_closed + 1, closeS - a))
-            s.copy(secs = Nil, batches_closed = s.batches_closed + 1)
-          }
-          batch.toSeq.sortBy(_.event_id).foreach { e =>
-            val sec = e.ts.getTime / 1000
-            var s = st.getOrElse(PeriodicLatencyState(sec, 0L, Nil, 0L))
-            val w = (sec - s.t0) / tickSec
-            if (s.secs.nonEmpty && w > s.w)
-              s = close(s, s.t0 + (s.w + 1) * tickSec)
-            s = s.copy(w = w, secs = sec :: s.secs)
-            if (s.secs.size >= batchSize) s = close(s, sec)
-            st = Some(s)
-          }
-          st.foreach(state.update)
-          out.result().iterator
-      }
+    flush(events, batchSize, Tick(tickSec))(latencies)
   }
 
   /** #27b-streaming Merge-error flag counters — the live form of

@@ -1,7 +1,7 @@
 package graft
 
 import graft.streaming._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -117,5 +117,42 @@ class QueueLatencyParitySpec extends AnyFunSuite {
     // tick closes extend latencies past the last arrival — the exact
     // model's distinguishing feature must actually appear
     assert(got.keys.exists(_.latency_s > 0))
+  }
+
+  test("queueLatencyPeriodic batches == batchFlushPeriodic's on a backward timestamp step") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val tickSec = 100L
+    val batchSize = 10
+    // arrival seconds in event_id order; 50 steps back into window 0
+    // after 150 opened a batch in window 1
+    val secs = Seq(0L, 150L, 50L, 180L, 400L)
+    val evts = secs.zipWithIndex.map { case (s, i) =>
+      Evt(1L, new java.sql.Timestamp(s * 1000), "s", i + 1L, 1.0)
+    }
+    def run[T: Encoder](name: String)(op: Dataset[Evt] => Dataset[T]): Array[T] = {
+      val in = MemoryStream[Evt]
+      val q = op(in.toDS()).writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      try { in.addData(evts); q.processAllAvailable() } finally q.stop()
+      spark.table(name).as[T].collect()
+    }
+    val batches = run[ClosedPeriodicBatch]("backstep_periodic")(
+      EventStream.batchFlushPeriodic(_, batchSize, tickSec))
+    val lats = run[LatencyObs]("backstep_latency_periodic")(
+      EventStream.queueLatencyPeriodic(_, batchSize, tickSec))
+
+    // the window is fixed when a batch opens: {0} ticks out at 100, then
+    // {150, 50, 180} at 200; 400 stays open
+    assert(batches.map(b => (b.batch_id, b.n_events, b.close_s)).toSet ==
+      Set((1L, 1, 100L), (2L, 3, 200L)), batches.toSeq)
+    assert(lats.groupBy(_.batch_id).view.mapValues(_.length).toMap ==
+      batches.map(b => b.batch_id -> b.n_events).toMap, lats.toSeq)
+    batches.foreach { b =>
+      val want = (b.first_event to b.last_event)
+        .map(id => b.close_s - secs((id - 1).toInt)).sorted
+      assert(lats.filter(_.batch_id == b.batch_id).map(_.latency_s).sorted.toSeq == want,
+        s"batch ${b.batch_id}: ${lats.toSeq}")
+    }
   }
 }

@@ -278,4 +278,46 @@ class StreamingRecoverySpec extends AnyFunSuite {
       (3L, 2, 11L, 12L, "time"), (4L, 5, 13L, 17L, "size")),
       s"restart must flush the open tail once and continue numbering; got $got")
   }
+
+  test("#9d-streaming batchFlushPeriodic resumes its tick anchor and open window from checkpoint") {
+    val src = tmp("bp_src"); val out = tmp("bp_out"); val ckpt = tmp("bp_ckpt")
+    def run(): Unit = {
+      val evts = spark.readStream.text(src)
+        .select(split(col("value"), "\\|").as("p"))
+        .select(col("p")(0).cast("long").as("user_id"),
+          to_timestamp(col("p")(1)).as("ts"),
+          lit("rk").as("event_type"),
+          col("p")(0).cast("long").as("event_id"),
+          lit(1.0).as("value"))
+        .as[Evt]
+      val q = EventStream.batchFlushPeriodic(evts, batchSize = 5, tickSec = 60)
+        .writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckpt).outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    // epoch 1: ids 1-7 one second apart from 00:00:01 — the tick anchor
+    // t0 is 00:00:01, {1..5} size-closes, {6,7} stays OPEN in window 0
+    addLines(src, "b1.txt",
+      (1 to 7).map(i => f"$i|2024-01-01 00:00:$i%02d"))
+    run()
+    assert(spark.read.parquet(out).count() == 1L)
+
+    // while DOWN: id 8 at t0+89 s (window 1) must tick-close the
+    // checkpointed {6,7} at t0+60; id 9 at t0+124 s (window 2) must
+    // tick-close {8} at t0+120 — a t0 re-anchored at id 8's arrival
+    // would put id 9 in 8's window and close nothing
+    addLines(src, "b2.txt",
+      Seq("8|2024-01-01 00:01:30", "9|2024-01-01 00:02:05"))
+    run()
+    val got = spark.read.parquet(out)
+      .select("batch_id", "n_events", "first_event", "last_event",
+        "closed_by", "close_s")
+      .as[(Long, Int, Long, Long, String, Long)].collect()
+    // close_s relative to the anchor: size batch 1 closed at t0+4 s
+    val t0 = got.find(_._1 == 1L).map(_._6 - 4).getOrElse(-1L)
+    assert(got.map(r => r.copy(_6 = r._6 - t0)).toSet == Set(
+      (1L, 5, 1L, 5L, "size", 4L), (2L, 2, 6L, 7L, "tick", 60L),
+      (3L, 1, 8L, 8L, "tick", 120L)),
+      s"restart must keep t0 and the open window; got ${got.toSeq}")
+  }
 }
